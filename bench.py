@@ -31,9 +31,37 @@ from real_time_weather_data_pipeline_for_philippine_cities_spark.plans.catalog i
 from real_time_weather_data_pipeline_for_philippine_cities_spark.session import get_spark
 
 
-def _force(df) -> None:
+def force(df) -> None:
     # noop sink: full execution, zero serialization back to the driver.
     df.write.format("noop").mode("overwrite").save()
+
+
+def warm_up(spark, sf_dir: str) -> None:
+    """Absorb one-time JIT/codegen costs before timing. The flagship
+    covers scan/join/window paths; the synthetic expression below
+    exercises the higher-order-function + md5 interpreter paths that the
+    dedup/similarity queries lean on (their first execution otherwise
+    pays several seconds of JIT that is not query cost)."""
+    force(CATALOG["flagship_latest_obs"].fn(spark, sf_dir))
+    warm = spark.range(0, 200_000, 1, 8).selectExpr(
+        "aggregate(transform(sequence(0, 9), i -> "
+        "CAST(conv(substring(md5(CAST(id + i AS STRING)), 1, 7), 16, 10) AS LONG)),"
+        " CAST(0 AS LONG), (a, x) -> a + x) AS s"
+    )
+    force(warm)
+    # Spin up the Python/Arrow worker pool once: pandas-UDF queries
+    # (IVF assign, blocked near-dup verify, multimodal mapInPandas)
+    # otherwise pay ~1-2 s of daemon+import startup on first use, which is
+    # environment cost, not query cost.
+    from pyspark.sql.functions import pandas_udf
+
+    @pandas_udf("double")
+    def _warm_py(x):  # type: ignore[no-untyped-def]
+        import numpy as np  # noqa: F401 — preload into the workers
+
+        return x * 1.0
+
+    force(spark.range(0, 32, 1, 32).select(_warm_py("id")))
 
 
 def main() -> None:
@@ -50,31 +78,7 @@ def main() -> None:
         load_start = None
 
     names = sorted(CATALOG)
-    # Warm-up: absorb one-time JIT/codegen costs before timing. The
-    # flagship covers scan/join/window paths; the synthetic expression
-    # below exercises the higher-order-function + md5 interpreter paths
-    # that the dedup/similarity queries lean on (their first execution
-    # otherwise pays several seconds of JIT that is not query cost).
-    _force(CATALOG["flagship_latest_obs"].fn(spark, sf_dir))
-    warm = spark.range(0, 200_000, 1, 8).selectExpr(
-        "aggregate(transform(sequence(0, 9), i -> "
-        "CAST(conv(substring(md5(CAST(id + i AS STRING)), 1, 7), 16, 10) AS LONG)),"
-        " CAST(0 AS LONG), (a, x) -> a + x) AS s"
-    )
-    _force(warm)
-    # Spin up the Python/Arrow worker pool once: pandas-UDF queries
-    # (IVF assign, blocked near-dup verify, multimodal mapInPandas)
-    # otherwise pay ~1-2 s of daemon+import startup on first use, which is
-    # environment cost, not query cost.
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def _warm_py(x):  # type: ignore[no-untyped-def]
-        import numpy as np  # noqa: F401 — preload into the workers
-
-        return x * 1.0
-
-    _force(spark.range(0, 32, 1, 32).select(_warm_py("id")))
+    warm_up(spark, sf_dir)
 
     # Reps are INTERLEAVED (full catalog pass per rep, min per query across
     # passes) rather than back-to-back: a transient host-noise window then
@@ -89,7 +93,7 @@ def main() -> None:
                 continue
             t0 = time.perf_counter()
             try:
-                _force(CATALOG[name].fn(spark, sf_dir))
+                force(CATALOG[name].fn(spark, sf_dir))
                 samples[name].append(time.perf_counter() - t0)
             except Exception as ex:  # one broken query must not kill the bench
                 errors[name] = f"{type(ex).__name__}: {str(ex)[:200]}"

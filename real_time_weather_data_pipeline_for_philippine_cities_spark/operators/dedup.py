@@ -21,8 +21,6 @@ has a ``*_sql`` twin emitting the equivalent DuckDB expression.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -432,7 +430,7 @@ def connected_components(
     adjacency against current labels + a min-aggregate; the convergence
     check is the round's own update count (a filter over the just-
     checkpointed result — no separate verification join). Lineage is
-    truncated with localCheckpoint every round so the plan stays flat.
+    truncated with :func:`materialize` every round so the plan stays flat.
     Rounds needed ≈ graph diameter; for adversarially deep graphs use
     ``connected_components_star`` (O(log d) rounds) or ``algorithm="auto"``
     on :func:`dedup_cluster_assign`, which falls back to it automatically.
@@ -453,8 +451,8 @@ def connected_components(
     # pipeline (the LSH band join) would execute twice inside the adj
     # checkpoint (measured ~1 s of the cluster-assign entry at sf0.1,
     # r10 — same pathology as pagerank's edges_deg fan-out).
-    a = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).localCheckpoint(
-        eager=True
+    a = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).transform(
+        materialize
     )
     # Materialize the adjacency ONCE: every propagation round joins
     # against adj — without this, the union re-executes per round.
@@ -819,32 +817,16 @@ WHERE bit_count(xor(a.sh, b.sh)::BIT) <= {max_hamming}
 def _with_shingle_df(expl: DataFrame) -> DataFrame:
     """Attach each exploded shingle row's global document frequency ``df``.
 
-    Default: a count window partitioned by the shingle hash — ONE pass
-    over the exploded rows (explode → exchange by h → count), instead of
-    the groupBy+join-back shape, which evaluates the explode TWICE (once
-    under the frequency aggregate, once as the join probe) and adds the
-    join exchanges (guide §2.4: two operations keyed the same way share
-    one exchange). The sf1 stage profile (r11) put the prefix stage —
-    explode + freq + per-doc ranking — at most of both jaccard heavies'
-    wall, so the second explode pass was the single biggest avoidable
-    term. count() over an unordered window is the exact groupBy count
-    (same BIGINT), so ranks and results are identical — pinned by the
-    oracle strict checks, which compute df via GROUP BY in DuckDB.
+    A count window partitioned by the shingle hash: one pass over the
+    exploded rows, where groupBy+join-back evaluated the explode twice
+    (r11 A/B: dedup_ngram_jaccard 0.82×, allpairs a wash;
+    OPTIMIZATION_r11.md). count() over an unordered window is the exact
+    groupBy count, so the oracle's GROUP BY twin matches bitwise.
 
     Hot-shingle caveat at 100 TB: the window shuffles full exploded rows
     by h with no map-side partial aggregation, and AQE cannot split a
-    skewed window partition (guide §2.5) — but the prefix rank only KEEPS
-    the rarest shingles per doc, and the old shape's join probe moved the
-    same exploded rows through the same h-exchange whenever the frequency
-    table outgrew broadcast, paying the extra aggregate pass on top.
-    ``$SPARK_GRAFT_JACCARD_DF=join`` restores the groupBy+join form
-    (A/B hook; measured at sf0.1 AND sf1 before adoption).
+    skewed window partition (guide §2.5).
     """
-    if os.environ.get("SPARK_GRAFT_JACCARD_DF", "window") == "join":
-        freq = expl.groupBy("h").agg(F.count(F.lit(1)).alias("df"))
-        return expl.join(freq, "h")
-    from pyspark.sql import Window
-
     return expl.withColumn(
         "df", F.count(F.lit(1)).over(Window.partitionBy("h"))
     )

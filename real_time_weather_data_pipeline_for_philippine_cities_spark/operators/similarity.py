@@ -20,7 +20,6 @@ are inlined into the DuckDB oracle (deterministic, seedless).
 from __future__ import annotations
 
 import hashlib
-import os
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -241,27 +240,20 @@ def lsh_buckets_col(
     vec_col: str, tables: list[list[list[float]]], dim: int
 ) -> Column:
     """Per-table LSH bucket ids as ``array<bigint>`` — ONE vectorized Arrow
-    pass instead of ``len(tables) * n_planes`` interpreted
-    ``aggregate(zip_with(...))`` folds (guide §4.2; the folds were the
-    measured hot spot of ann_lsh_multitable: ~0.85 s of its 2.8 s at
-    sf0.1, 48 folds × corpus rows, and they never reach codegen — the
-    expanded-codegen form is a measured round-4 dead end past JIT limits).
+    pass instead of ``len(tables) * n_planes`` interpreted folds of
+    :func:`lsh_bucket_col` (r11: ann_lsh_multitable 2.8 s → 1.1 s at
+    sf0.1, 7.6 s → 1.4 s at sf1; OPTIMIZATION_r11.md).
 
-    Bitwise parity with :func:`lsh_bucket_col`: each plane dot accumulates
-    per-dimension in ASCENDING index order (``acc += outer(V[:,d], P[:,d])``)
-    — the identical IEEE op sequence to the sequential left fold both
-    engines' SQL uses, the same oracle-proven pattern as the knn/ivf
-    kernels — and the bucket bit is ``dot > 0`` (NaN > 0 false on both
-    sides). Callers apply the finite/dim ingestion contract first; a
-    malformed row that bypasses it degrades to bucket 0 per table, exactly
-    the expression form's NULL-dot semantics, instead of crashing vstack.
-
-    ``$SPARK_GRAFT_LSH_KERNEL=expr`` keeps the interpreted expression form
-    (A/B hook; the default is the Arrow kernel).
+    Bitwise parity with :func:`lsh_bucket_col` on finite vectors: each
+    plane dot accumulates per-dimension in ASCENDING index order — the
+    identical IEEE op sequence to the sequential left fold both engines'
+    SQL uses — and the bucket bit is ``dot > 0``. The parity rests on the
+    finite/dim ingestion contract callers apply first: Spark orders NaN
+    above every number, so a NaN dot is bit 1 in the expression form but
+    bit 0 here. A row of the wrong length or NULL degrades to bucket 0 per
+    table, the expression form's NULL-dot semantics, instead of crashing
+    vstack.
     """
-    if os.environ.get("SPARK_GRAFT_LSH_KERNEL", "arrow") == "expr":
-        return F.array(*[lsh_bucket_col(vec_col, tb) for tb in tables])
-
     from pyspark.sql.functions import pandas_udf
 
     n_tables = len(tables)

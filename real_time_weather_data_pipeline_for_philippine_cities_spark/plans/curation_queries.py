@@ -1162,7 +1162,7 @@ def q_bigram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 2-3x and the executed plan re-tokenizes the corpus per reference (5
     # scans, 0 reused exchanges) — but persisting both count tables
     # measured 2.3x SLOWER at sf0.1 and 2.0x at sf1 (interleaved A/B,
-    # $SPARK_GRAFT_SHARED_MAT): the re-scans are cheap map-combined
+    # tools/ab.py): the re-scans are cheap map-combined
     # passes that overlap in one job, while the cache pays a columnar
     # write + a scheduling barrier. Recompute wins at both SFs.
     uni = (

@@ -747,20 +747,13 @@ def q_dominant_part_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The correlated comparison decorrelates into the per-(part,supplier)
     aggregate plus per-part totals as WINDOW aggregates over the reduced
-    rows (sum/count over partition by l_partkey) — not a second groupBy
-    joined back: Catalyst does not reuse the `per` subtree between a
-    join's two sides, so the join form executed the lineitem scan and
-    the first aggregate TWICE (r11 plan audit: 2 parquet scans, 4
-    exchanges; the window form is 1 scan, 3 exchanges — guide §2.4, the
-    window reuses the aggregate's reduced rows in place). Window sum and
-    count over BIGINTs are the exact groupBy values, so the dominance
-    threshold `q * nsupp > 3 * tq` is unchanged (all-BIGINT, quantities
-    integer-valued and cast before summing — exact on both engines; the
-    DuckDB twin keeps the GROUP BY + join form and matches bitwise).
-    ``$SPARK_GRAFT_Q20_SHAPE=join`` restores the join form (A/B hook).
+    rows, not a second groupBy joined back: Catalyst does not reuse `per`
+    across a join's two sides, so the join form scanned lineitem twice
+    (r11: 2 scans → 1, 0.76× at sf0.1 / 0.72× at sf1). Window sum and
+    count over BIGINTs are the exact groupBy values, so the all-integer
+    threshold `q * nsupp > 3 * tq` matches the DuckDB GROUP BY + join twin
+    bitwise.
     """
-    import os as _os
-
     li = t(spark, sf_dir, "lineitem").select(
         # floor() on BOTH engines: a bare cast truncates in Spark but rounds in
         # DuckDB, so the integer contract would silently diverge on any
@@ -768,21 +761,12 @@ def q_dominant_part_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_partkey", "l_suppkey", F.floor("l_quantity").cast("long").alias("qty")
     )
     per = li.groupBy("l_partkey", "l_suppkey").agg(F.sum("qty").alias("q"))
-    if _os.environ.get("SPARK_GRAFT_Q20_SHAPE", "window") == "join":
-        tot = per.groupBy("l_partkey").agg(
-            F.sum("q").alias("tq"), F.count(F.lit(1)).alias("nsupp")
-        )
-        dominated = (
-            per.join(tot, "l_partkey")
-            .filter(F.col("q") * F.col("nsupp") > F.lit(3) * F.col("tq"))
-        )
-    else:
-        wp = Window.partitionBy("l_partkey")
-        dominated = (
-            per.withColumn("tq", F.sum("q").over(wp))
-            .withColumn("nsupp", F.count(F.lit(1)).over(wp))
-            .filter(F.col("q") * F.col("nsupp") > F.lit(3) * F.col("tq"))
-        )
+    wp = Window.partitionBy("l_partkey")
+    dominated = (
+        per.withColumn("tq", F.sum("q").over(wp))
+        .withColumn("nsupp", F.count(F.lit(1)).over(wp))
+        .filter(F.col("q") * F.col("nsupp") > F.lit(3) * F.col("tq"))
+    )
     supp = t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
     return (
         dominated.groupBy(F.col("l_suppkey").alias("s_suppkey"))

@@ -23,7 +23,7 @@ from ..functions.rounding import (
     quantize_double,
     round_div,
 )
-from ..session import materialize_shared
+from ..session import materialize
 from .base import Q, finite, finite_sql, spread, t
 
 
@@ -561,7 +561,7 @@ def q_shingle_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     # counts is post-census (doc tokens + cap-bounded pair tokens), so
     # materialize it once; every branch reads the leaf.
     counts = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("c")).transform(
-        materialize_shared
+        materialize
     )
     sizes = counts.filter(F.col("tok") < 4294967296).select(
         F.col("tok").alias("doc_id"), F.col("c").alias("n_sh")

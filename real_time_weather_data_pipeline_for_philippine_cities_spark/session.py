@@ -65,7 +65,7 @@ if _initial_parts and _initial_parts != "0":
 #     under the byte cap (set to the 64 MB advisory partition size — a
 #     partition that coalesced to the advisory target builds a local map
 #     of the same order; raise/lower with executor memory in production).
-# Interleaved A/B at sf0.1 (tools/confset_ab.py, min-of-3): heavies
+# Interleaved A/B at sf0.1 (tools/ab.py, min-of-3): heavies
 # total 0.84× with zero losers above rep noise; mid-tier cohort 0.86×.
 # AQE skew-split still applies to SHJ, so the skew posture is unchanged.
 # Override with $SPARK_GRAFT_SHJ_LOCALMAP (bytes; 0/empty disables both).
@@ -132,30 +132,6 @@ def materialize(df, eager: bool = True):
 
         return df.persist(StorageLevel.MEMORY_AND_DISK)
     return df.localCheckpoint(eager=eager)
-
-
-def materialize_shared(df, eager: bool = True):
-    """:func:`materialize` for SMALL multi-consumer stages found by the
-    r11 duplicate-subtree audit (Catalyst re-executes a DataFrame's plan
-    once per reference; AQE exchange reuse measured 0 hits on these).
-    ``$SPARK_GRAFT_SHARED_MAT=off`` restores the recompute-per-consumer
-    plans (A/B hook; every adopted site was measured at sf0.1 AND sf1).
-    """
-    if os.environ.get("SPARK_GRAFT_SHARED_MAT", "on") == "off":
-        return df
-    return materialize(df, eager)
-
-
-def persist_shared(df):
-    """The persist() arm of the same audit — for CORPUS-SCALE shared
-    stages, where the r10 sf1 measurements chose the in-memory-columnar
-    cache over an eager checkpoint (lazy: stages overlap in one job).
-    Same ``$SPARK_GRAFT_SHARED_MAT=off`` hook."""
-    if os.environ.get("SPARK_GRAFT_SHARED_MAT", "on") == "off":
-        return df
-    from pyspark import StorageLevel
-
-    return df.persist(StorageLevel.MEMORY_AND_DISK)
 
 
 def tune(spark: SparkSession) -> SparkSession:

@@ -2,7 +2,7 @@
 
 The three STRICT files are the repo's cross-engine correctness ladder
 (sf0.01 / sf1 / sf10). They are regenerated by real sweeps
-(tools/strict_check.py, tools/sf1_sweep.py, tools/sf10_sweep.py), so a
+(tools/strict_check.py at sf0.01 and sf1, tools/sf10_sweep.py), so a
 red entry or a silently shrunken cohort in a committed artifact means a
 sweep was run, failed, and the failure was committed anyway — this test
 makes that loud. It also pins the sf10 exclusion list to the documented

@@ -9,7 +9,7 @@ attributable: candidates-minus-prefix is the prefix self-join, full-minus-
 candidates is the verification join + aggregate barrier.
 
 NOTE: stage boundaries replicate the operator bodies' persist structure;
-construction runs inside the timed window (see conf_ab.py note).
+construction runs inside the timed window (see the tools/ab.py note).
 """
 
 from __future__ import annotations

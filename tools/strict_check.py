@@ -9,6 +9,10 @@ Two layers, both must pass:
 
 Usage: python tools/strict_check.py [query_name ...]   (default: all oracled)
 Exit code = number of failing queries.
+
+The sf1 sweep is the no-argument form at bench_data/sf1 (~30-40 min; it
+writes STRICT_sf1.json):
+    STRICT_SF_DIR=bench_data/sf1 SPARK_DRIVER_MEM=48g python tools/strict_check.py
 """
 import sys, os, math
 
