@@ -13,10 +13,15 @@ injectable enrichment edges:
 Two deliberate improvements over the reference, each flagged:
   * geocode only changed/new rows and reuse cached coordinates for
     unchanged ones (the reference re-geocodes everything on any change —
-    wdf.py:405 vs the diff at wdf.py:387); ``full_regeocode=True`` restores
-    reference behavior for fidelity testing.
+    wdf.py:405 vs the diff at wdf.py:387).
   * dense surrogate keys are pinned to an explicit sort (name, province)
     instead of inherited row order (wdf.py:240).
+
+One lineage cut: ``run_pipeline`` materializes the geocoded snapshot once.
+Without it each of the three sinks re-runs the geocode plan. With it each
+changed row is fetched once, the snapshot, dim and facts carry the same
+coordinates, and the snapshot sink can overwrite the file the run read,
+as the reference rewrites all_locations.xlsx in place (wdf.py:426).
 """
 
 from __future__ import annotations
@@ -30,6 +35,7 @@ from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 from ..functions.json_flatten import flatten_weather, parse_weather_json
 from ..operators.enrich import Fetcher, enrich_map_in_pandas
 from ..operators.relational import dense_ids, symmetric_difference
+from ..session import materialize
 
 #: The 10 snapshot compare columns (wdf.py:377-380) — the de-facto schema
 #: contract of the xlsx snapshot.
@@ -82,46 +88,31 @@ def geocode_locations(
     changes: DataFrame,
     old_snapshot: DataFrame | None,
     geocoder: Fetcher,
-    full_regeocode: bool = False,
-    rate_per_sec: float | None = None,
 ) -> DataFrame:
     """E1: attach latitude/longitude, fetching only what the diff requires.
 
-    Incremental mode geocodes rows whose compare-key appears as 'left_only'
-    in the diff and coalesces cached coordinates for the rest — at scale
-    this turns a full-corpus fetch into O(changes).
+    The diff's 'left_only' rows ARE the rows to fetch: they carry exactly
+    COMPARE_COLUMNS, which is every column ``merge_cities_provinces``
+    emits, and with no snapshot every row is 'left_only'. Every other
+    current row matches an old snapshot row on all compare columns and
+    takes its cached coordinates — at scale a full-corpus fetch becomes
+    O(changes).
     """
+    to_fetch = changes.filter(F.col("diff_side") == "left_only").drop("diff_side")
     geo_schema = StructType(
-        list(merged.schema.fields)
+        list(to_fetch.schema.fields)
         + [StructField("latitude", DoubleType()), StructField("longitude", DoubleType())]
     )
-    if full_regeocode or old_snapshot is None:
-        return enrich_map_in_pandas(
-            merged, geocoder, geo_schema, rate_per_sec=rate_per_sec, single_partition=True
-        )
-
-    # Null-safe equality throughout: oldName is null for ~98% of rows
-    # (SURVEY.md §1.2) and a plain `=` join would silently route every
-    # null-keyed row to the cached branch.
-    changed_keys = changes.filter(F.col("diff_side") == "left_only").select(*COMPARE_COLUMNS)
-    m, ck = merged.alias("m"), changed_keys.alias("ck")
-    ns_cond = [F.col(f"m.{c}").eqNullSafe(F.col(f"ck.{c}")) for c in COMPARE_COLUMNS]
-    to_fetch = m.join(ck, ns_cond, "left_semi")
-    cached = m.join(ck, ns_cond, "left_anti").join(
-        F.broadcast(
-            old_snapshot.select(
-                "code_city",
-                F.col("latitude").alias("latitude"),
-                F.col("longitude").alias("longitude"),
-            )
-        ),
-        "code_city",
-        "left",
-    )
-    fetched = enrich_map_in_pandas(
-        to_fetch, geocoder, geo_schema, rate_per_sec=rate_per_sec, single_partition=True
-    )
-    return fetched.unionByName(cached.select(*[f.name for f in geo_schema.fields]))
+    fetched = enrich_map_in_pandas(to_fetch, geocoder, geo_schema, single_partition=True)
+    if old_snapshot is None:
+        return fetched
+    # Null-safe equality: oldName is null for ~98% of rows (SURVEY.md
+    # §1.2), and a plain `=` join would drop every null-keyed row.
+    m, o = merged.alias("m"), old_snapshot.alias("o")
+    cached = m.join(
+        o, [F.col(f"m.{c}").eqNullSafe(F.col(f"o.{c}")) for c in COMPARE_COLUMNS], "inner"
+    ).select(*[F.col(f"m.{c}") for c in COMPARE_COLUMNS], "o.latitude", "o.longitude")
+    return fetched.unionByName(cached)
 
 
 def build_locations_dim(geocoded: DataFrame) -> DataFrame:
@@ -185,21 +176,15 @@ def run_pipeline(
     old_snapshot: DataFrame | None,
     geocoder: Fetcher,
     weather_fetcher: Fetcher,
-    full_regeocode: bool = False,
 ) -> PipelineResult:
-    """main() (wdf.py:338-453) as a pure plan: no side effects — callers
-    write locations_dim (overwrite) / observations (append) / new_snapshot
-    wherever they persist state. Used identically by batch entry points and
-    the streaming foreachBatch shell (streaming/ingest.py)."""
+    """main() (wdf.py:338-453) as one scheduled run. The geocoded snapshot
+    is materialized here, so this call runs the diff and geocode job;
+    callers write locations_dim (overwrite), observations (append) and
+    new_snapshot, which may overwrite the path ``old_snapshot`` was read
+    from. ``changes`` stays lazy over ``old_snapshot``."""
     merged = merge_cities_provinces(cities, provinces)
     changes = detect_changes(merged, old_snapshot)
-    if changes.isEmpty() and old_snapshot is not None:
-        # No location drift: reuse snapshot, dim unchanged (wdf.py:399-401).
-        snapshot = old_snapshot
-    else:
-        snapshot = geocode_locations(
-            merged, changes, old_snapshot, geocoder, full_regeocode=full_regeocode
-        )
+    snapshot = geocode_locations(merged, changes, old_snapshot, geocoder).transform(materialize)
     dim = build_locations_dim(snapshot)
     obs = ingest_weather(snapshot, dim, weather_fetcher)
     return PipelineResult(dim, obs, changes, snapshot)

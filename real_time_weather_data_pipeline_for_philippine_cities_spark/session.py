@@ -95,27 +95,34 @@ if _shj_localmap and _shj_localmap != "0":
 _CKPT_DIR_SET: set[str] = set()
 
 
-def materialize(df, eager: bool = True):
-    """Cut lineage on a shared intermediate, with the durability posture
-    selected by ``$SPARK_GRAFT_CHECKPOINT`` (round-10 verdict item: the
-    eager-materialization sites were hardcoded ``localCheckpoint``, whose
-    blocks are executor-local and unreplicated — on a real cluster a lost
-    executor kills the job instead of recomputing).
+def materialize(df):
+    """Cut lineage on a shared intermediate now (one job at the call), with
+    the durability posture selected by ``$SPARK_GRAFT_CHECKPOINT``
+    (round-10 verdict item: the lineage-cut sites were hardcoded
+    ``localCheckpoint``, whose blocks are executor-local and unreplicated —
+    on a real cluster a lost executor kills the job instead of
+    recomputing).
 
-      * ``local`` (default) — ``localCheckpoint``: fastest, lineage cut,
-        blocks on the executors that computed them. The bench/local[N]
-        posture; a lost executor aborts the query.
+      * ``local`` (default) — ``localCheckpoint``: fastest, blocks on the
+        executors that computed them. The bench/local[N] posture; a lost
+        executor aborts the query.
       * ``reliable`` — ``checkpoint`` to the reliable checkpoint dir
         (``$SPARK_GRAFT_CHECKPOINT_DIR``, default ``/tmp/rtw-checkpoints``;
         point it at HDFS/object storage on a cluster): blocks survive
-        executor loss. Costs a write+read of the materialized set.
-      * ``persist`` — MEMORY_AND_DISK cache instead of a checkpoint:
-        lineage kept (fault-tolerant recompute) at the cost of one AQE
-        replan per consumer; lazy — the first consumer materializes it.
+        executor loss. Costs a write+read of the materialized set; the
+        files are deleted once the frame is garbage-collected
+        (``spark.cleaner.referenceTracking.cleanCheckpoints``, set by
+        ``get_spark``).
 
-    Result VALUES are identical in every mode (pinned by
-    tests/test_plan_shape.py::test_checkpoint_modes_agree); only the
-    durability/re-evaluation trade-off moves.
+    Every caller needs the cut itself: the iterative graph rounds keep
+    their plans flat, the change-detect promote and the pipeline's
+    snapshot sink overwrite the files the cut frame was read from. So a
+    cache (``persist``) is not a mode: it keeps the lineage, so plans grow
+    per round, a sink can re-read files it is overwriting, and nothing
+    releases its blocks.
+
+    Result VALUES are identical in both modes (pinned by
+    tests/test_plan_shape.py::test_checkpoint_modes_agree).
     """
     mode = os.environ.get("SPARK_GRAFT_CHECKPOINT", "local")
     if mode == "reliable":
@@ -126,12 +133,10 @@ def materialize(df, eager: bool = True):
                 os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR", "/tmp/rtw-checkpoints")
             )
             _CKPT_DIR_SET.add(app)
-        return df.checkpoint(eager=eager)
-    if mode == "persist":
-        from pyspark import StorageLevel
-
-        return df.persist(StorageLevel.MEMORY_AND_DISK)
-    return df.localCheckpoint(eager=eager)
+        return df.checkpoint()
+    if mode != "local":
+        raise ValueError(f"SPARK_GRAFT_CHECKPOINT must be local or reliable, not {mode!r}")
+    return df.localCheckpoint()
 
 
 def tune(spark: SparkSession) -> SparkSession:
@@ -159,6 +164,9 @@ def get_spark(app_name: str = "rtw-spark", master: str | None = None) -> SparkSe
         # only stdout the harness captures (BENCH_r03 was truncated to
         # unparseability by console-progress output).
         .config("spark.ui.showConsoleProgress", "false")
+        # Delete reliable-mode materialize() checkpoints once their frame
+        # is garbage-collected; every scheduled pipeline run writes one.
+        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         # 32 MB broadcast budget. A 128 MB experiment shaved ~3 s off
         # ngram jaccard at sf≈1 (shingle-frequency table broadcast) but
         # cost 3-16x on the minhash/band pipelines at sf0.1 — the larger

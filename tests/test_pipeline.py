@@ -15,6 +15,11 @@ from real_time_weather_data_pipeline_for_philippine_cities_spark.plans.pipeline 
     merge_cities_provinces,
     run_pipeline,
 )
+from real_time_weather_data_pipeline_for_philippine_cities_spark.sinks.tables import (
+    append_observations,
+    overwrite_locations_dim,
+    write_snapshot,
+)
 
 CITY_SCHEMA = (
     "code string, name string, oldName string, isCapital boolean,"
@@ -43,7 +48,9 @@ GEO = {
     "Batac": {"latitude": 18.05, "longitude": 120.56},
     "Quezon City": {"latitude": 14.65, "longitude": 121.05},
     "Cebu": {"latitude": 10.32, "longitude": 123.90},
+    "Iligan": {"latitude": 8.23, "longitude": 124.24},
 }
+ILIGAN = ("102400000", "Iligan", None, False, "012800000", "0", "10", "mindanao", "1010240000")
 
 
 def fake_geocoder(row):
@@ -134,15 +141,12 @@ def test_pipeline_incremental_geocode_uses_cache(spark, frames):
 
     # Second run adds one city. The marker geocoder returns lat 99.0 for
     # EVERY row it is asked about — so any pre-existing city showing 99.0
-    # would prove a redundant re-fetch (fetchers run in executor processes,
-    # so call-counting lists don't travel back; values do).
+    # would prove a redundant re-fetch of that row (call counts are pinned
+    # by test_scheduled_runs_overwrite_one_snapshot_and_fetch_each_change_once).
     def marker_geocoder(row):
         return {"latitude": 99.0, "longitude": 99.0}
 
-    cities2 = _cities(
-        spark,
-        CITIES + [("102400000", "Iligan", None, False, "012800000", "0", "10", "mindanao", "1010240000")],
-    )
+    cities2 = _cities(spark, CITIES + [ILIGAN])
     second = run_pipeline(spark, cities2, provinces, snapshot, marker_geocoder, fake_weather)
     snap = {r.name: r for r in second.new_snapshot.collect()}
     assert snap["Iligan"].latitude == 99.0           # new city fetched
@@ -162,6 +166,40 @@ def test_pipeline_no_changes_skips_geocode(spark, frames):
 
     second = run_pipeline(spark, cities, provinces, snapshot, exploding_geocoder, fake_weather)
     assert second.locations_dim.count() == 3
+
+
+def test_scheduled_runs_overwrite_one_snapshot_and_fetch_each_change_once(spark, tmp_path):
+    """Three scheduled runs through the real sinks on ONE snapshot path,
+    as the reference rewrites all_locations.xlsx in place (wdf.py:426):
+    the first run, one added city, then no change. The geocoder counts its
+    calls with an accumulator (fetchers run in Python workers, so a plain
+    counter would not travel back)."""
+    calls = spark.sparkContext.accumulator(0)
+
+    def counting_geocoder(row):
+        calls.add(1)
+        return fake_geocoder(row)
+
+    snap_path, dim_path, obs_path = (str(tmp_path / d) for d in ("snap", "dim", "obs"))
+    provinces = _provinces(spark, PROVINCES)
+    got = []
+    for r, rows in enumerate([CITIES, CITIES + [ILIGAN], CITIES + [ILIGAN]]):
+        before = calls.value
+        old = spark.read.parquet(snap_path) if r else None
+        res = run_pipeline(
+            spark, _cities(spark, rows), provinces, old, counting_geocoder, fake_weather
+        )
+        write_snapshot(res.new_snapshot, snap_path)
+        overwrite_locations_dim(res.locations_dim, dim_path)
+        append_observations(res.observations, obs_path)
+        got.append((calls.value - before, spark.read.parquet(snap_path).count()))
+
+    assert got == [(3, 3), (1, 4), (0, 4)]
+    dim = spark.read.parquet(dim_path)
+    assert sorted(r.location_id for r in dim.collect()) == [1, 2, 3, 4]
+    snap = {r.name: r.latitude for r in spark.read.parquet(snap_path).collect()}
+    assert snap == {"City of Batac": 18.05, "Quezon City": 14.65, "Cebu": 10.32, "Iligan": 8.23}
+    assert spark.read.parquet(obs_path).count() == 3 + 4 + 4
 
 
 def test_enrichment_rate_limit_paces_requests(spark):

@@ -304,18 +304,20 @@ def test_pairwise_dedup_parallelizes(spark, sf_dir, name):
 
 def test_checkpoint_modes_agree(spark, sf_dir, monkeypatch):
     """$SPARK_GRAFT_CHECKPOINT selects durability posture only — the
-    local / reliable / persist modes of session.materialize must produce
-    identical rows (canonical consumer: the connected-components entry,
-    whose edge pipeline runs through three materialize sites)."""
-    import os
+    local / reliable modes of session.materialize must produce identical
+    rows (canonical consumer: the connected-components entry, whose edge
+    pipeline runs through three materialize sites). Reliable-mode
+    checkpoint files are cleaned once their frame is garbage-collected."""
+    conf = spark.sparkContext.getConf()
+    assert conf.get("spark.cleaner.referenceTracking.cleanCheckpoints") == "true"
 
     results = {}
-    for mode in ("local", "reliable", "persist"):
+    for mode in ("local", "reliable"):
         monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT", mode)
         df = CATALOG["canonical_doc_assign"].fn(spark, sf_dir)
         results[mode] = sorted(map(tuple, df.collect()))
         spark.catalog.clearCache()
-    assert results["local"] == results["reliable"] == results["persist"]
+    assert results["local"] == results["reliable"]
     assert len(results["local"]) > 0
 
 
