@@ -4,8 +4,12 @@ Every query in this engine assumes:
   * session timezone UTC (the reference's ``datetime.fromtimestamp`` is
     local-tz — SURVEY.md §7.7.4 — we pin UTC so results are machine-stable),
   * AQE enabled (runtime join-strategy selection, skew handling),
-  * a modest shuffle-partition count for local[N] testing; on a real
-    cluster this is left to AQE's coalescing + the cluster default.
+  * ``spark.sql.shuffle.partitions`` = the session's cores
+    (``defaultParallelism``). With AQE on, batch shuffles start from
+    ``initialPartitionNum`` instead, so this conf sizes only the plans
+    that run with AQE off: streaming micro-batches, their state stores,
+    and the batch frames inside ``foreachBatch``. A streaming checkpoint
+    keeps the partition count it was created with.
 
 ``tune(spark)`` applies only runtime-settable confs, so it is safe on a
 session we did not build (the driver passes us one).
@@ -140,8 +144,16 @@ def materialize(df):
 
 
 def tune(spark: SparkSession) -> SparkSession:
-    """Apply runtime confs to an externally-provided session (idempotent)."""
-    for k, v in _RUNTIME_CONFS.items():
+    """Apply runtime confs to an externally-provided session (idempotent).
+
+    The AQE-off partition count follows the session's cores, because a
+    state store costs a load and a commit per partition whatever its
+    row count: 32 partitions on local[4] spent most of an AvailableNow
+    invocation committing stores that held a few thousand rows.
+    """
+    confs = dict(_RUNTIME_CONFS)
+    confs["spark.sql.shuffle.partitions"] = str(spark.sparkContext.defaultParallelism)
+    for k, v in confs.items():
         try:
             spark.conf.set(k, v)
         except Exception:
@@ -152,12 +164,12 @@ def tune(spark: SparkSession) -> SparkSession:
 
 
 def get_spark(app_name: str = "rtw-spark", master: str | None = None) -> SparkSession:
-    """Build a local session sized for the test harness (local[N], AQE on)."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    """Build a local session (AQE on) on local[$SPARK_GRAFT_CPUS], by
+    default the CPUs this process may use."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", "32")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         # No \r progress spam on stdout: bench.py's JSON line must be the

@@ -19,6 +19,11 @@ genuine streaming equivalents:
 Every transformation is the SAME batch function from plans/ — foreachBatch
 reuses the tested batch plan verbatim, so streaming correctness reduces to
 batch correctness plus delivery semantics.
+
+Streams run with AQE off, so their shuffles, state stores and
+``foreachBatch`` frames take ``spark.sql.shuffle.partitions``, which
+``session.tune`` sets to the session's cores; a checkpoint keeps the
+count it was created with.
 """
 
 from __future__ import annotations

@@ -1,8 +1,11 @@
 """Streaming observability (SURVEY.md §2.11): the reference's DEBUG
 logging (weather_data_fetcher.py:14,47,129) maps to a
 StreamingQueryListener capturing per-epoch progress — rows/sec, batch
-duration, state size — queryable as a DataFrame for the same
-analytics surface as any other table.
+duration, watermark, state size, state-store instances and commit time —
+queryable as a DataFrame for the same analytics surface as any other
+table. The state columns are summed over the epoch's stateful operators
+(0 for a stateless stream); ``watermark`` is null for a stream without
+one.
 """
 
 from __future__ import annotations
@@ -16,8 +19,13 @@ from pyspark.sql.streaming import StreamingQueryListener
 PROGRESS_SCHEMA = (
     "query_id string, batch_id long, timestamp string,"
     " num_input_rows long, input_rows_per_second double,"
-    " process_rows_per_second double, batch_duration_ms long"
+    " process_rows_per_second double, batch_duration_ms long,"
+    " watermark string, state_rows_total long, state_store_instances long,"
+    " state_commit_ms long"
 )
+
+#: column order of ``progress_df``
+_COLUMNS = tuple(c.split()[0] for c in PROGRESS_SCHEMA.split(","))
 
 
 class ProgressRecorder(StreamingQueryListener):
@@ -34,6 +42,7 @@ class ProgressRecorder(StreamingQueryListener):
 
     def onQueryProgress(self, event) -> None:  # noqa: N802
         p = json.loads(event.progress.json)
+        ops = p.get("stateOperators") or []
         self.events.append(
             {
                 "query_id": str(p.get("id")),
@@ -45,6 +54,12 @@ class ProgressRecorder(StreamingQueryListener):
                     p.get("processedRowsPerSecond", 0.0) or 0.0
                 ),
                 "batch_duration_ms": int(p.get("batchDuration", 0)),
+                "watermark": (p.get("eventTime") or {}).get("watermark"),
+                "state_rows_total": sum(int(o.get("numRowsTotal", 0)) for o in ops),
+                "state_store_instances": sum(
+                    int(o.get("numStateStoreInstances", 0)) for o in ops
+                ),
+                "state_commit_ms": sum(int(o.get("commitTimeMs", 0)) for o in ops),
             }
         )
         if len(self.events) > self._max:
@@ -58,9 +73,5 @@ class ProgressRecorder(StreamingQueryListener):
 
     # -- analytics surface --------------------------------------------------
     def progress_df(self, spark: SparkSession) -> DataFrame:
-        rows = [tuple(e[k] for k in (
-            "query_id", "batch_id", "timestamp", "num_input_rows",
-            "input_rows_per_second", "process_rows_per_second",
-            "batch_duration_ms",
-        )) for e in self.events]
+        rows = [tuple(e[k] for k in _COLUMNS) for e in self.events]
         return spark.createDataFrame(rows or [], PROGRESS_SCHEMA)

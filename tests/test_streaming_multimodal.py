@@ -527,6 +527,8 @@ def test_progress_listener_records_epochs(spark, landing, tmp_path):
     rows = pdf.collect()
     assert sum(r.num_input_rows for r in rows) > 0
     assert all(r.batch_id >= 0 for r in rows)
+    # stream_observations puts a watermark on the stream
+    assert all(r.watermark for r in rows)
 
 
 def test_watermark_drops_late_data_across_epochs(spark, tmp_path):
